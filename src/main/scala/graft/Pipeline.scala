@@ -20,6 +20,13 @@ object Pipeline {
     "Translate each value of the JSON object to the target language. " +
       "Reply with a JSON object mapping the same keys to translations."
 
+  /** The four sinks of one run. They are lazy views of ONE persisted
+    * reconcile (see [[graft.operators.Reconcile.run]]): the first frame
+    * consumed runs the batching → translator → parse → join chain and
+    * fills the cache, the other three only filter and aggregate it. A
+    * caller that calls [[graft.core.Caches.release]] before consuming all
+    * four pays a full recompute for each frame consumed after it.
+    */
   case class Result(output: DataFrame, missing: DataFrame,
                     extra: DataFrame, summary: DataFrame)
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.Dataset
 
 /** Registry for plan intermediates that operators persist because the
   * returned DataFrame re-reads them on every action (Batching's
-  * range-partitioned RDD, MinHashLSH's shingle frame). The blocks must
+  * range-partitioned RDD, MinHashLSH's shingle frame, and the one
+  * reconcile frame all four `Pipeline.Result` frames share). The blocks must
   * outlive the operator call — the caller's action is what consumes them —
   * so the operator cannot unpersist eagerly. Spark's ContextCleaner drops
   * them when the returned plan is garbage-collected; long-lived sessions
@@ -24,7 +25,9 @@ object Caches {
 
   /** Unpersist every tracked intermediate (non-blocking). Safe to call at
     * any point where no returned-but-unmaterialized plan from a previous
-    * operator call is still needed.
+    * operator call is still needed; a plan consumed after it recomputes its
+    * whole chain (e.g. a `Pipeline.Result` whose reports are written after
+    * a release).
     */
   def release(): Unit = {
     var r = rdds.poll()

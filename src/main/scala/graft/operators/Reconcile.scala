@@ -13,10 +13,15 @@ import graft.functions.ParseFunctions
   * extra / shifted values.
   *
   * Scale notes: `expected` and `translations` are both keyed by
-  * (custom_id, description_id); the join shuffles on that composite key
-  * once and every downstream op (missing, shift windows) reuses the same
-  * partitioning. The reference's O(n²) nested-loop English lookup
-  * (auto_translate.py:972-974) disappears into a hash join.
+  * (custom_id, description_id) and meet in one shuffled join; the
+  * reference's O(n²) nested-loop English lookup (auto_translate.py:972-974)
+  * disappears into it. The composed functions below are lazy, so every
+  * frame built from them re-runs the whole upstream chain (batching,
+  * translator, parse cascade, last-wins aggregate, join) when it is
+  * consumed. [[run]] therefore joins ONCE, full outer, persists that
+  * frame and derives all four results from it by filters, the way the
+  * reference writes its CSV, missing log and summary from a single pass
+  * per batch (auto_translate.py:904-1134).
   */
 object Reconcile {
 
@@ -53,10 +58,12 @@ object Reconcile {
     * description_id, english_sentence.
     */
   def reconcile(expected: DataFrame, translationRows: DataFrame): DataFrame =
-    expected
-      .join(translationRows, Seq("custom_id", "description_id"), "left_outer")
-      .withColumn("translated_sentence",
-        coalesce(col("translation"), lit(Schemas.FailedSentinel)))
+    withSentinel(expected
+      .join(translationRows, Seq("custom_id", "description_id"), "left_outer"))
+
+  private def withSentinel(joined: DataFrame): DataFrame =
+    joined.withColumn("translated_sentence",
+      coalesce(col("translation"), lit(Schemas.FailedSentinel)))
 
   /** J4 — expected ids with no translation (auto_translate.py:977-992). */
   def missing(reconciled: DataFrame): DataFrame =
@@ -106,12 +113,27 @@ object Reconcile {
       .crossJoin(flagged)
   }
 
-  /** Full reconcile pass: returns (result, missing, extra, summary). */
+  /** Full reconcile pass: returns (result, missing, extra, summary).
+    *
+    * One full-outer join of `expected` with `translations(responses)`,
+    * persisted through [[graft.core.Caches]]: rows with an expected side
+    * are [[reconcile]]'s left-outer result, rows without one are
+    * [[extra]]'s left-anti result, so the four frames need no second join
+    * and the first one consumed fills the cache the other three read.
+    * Reading them all from one materialization also makes them agree by
+    * construction (the minted `resp_ord` tie-break is computed once).
+    */
   def run(expected: DataFrame, responses: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val tr = translations(responses)
-    val rec = reconcile(expected, tr)
-    val ext = extra(expected, tr)
+    val both = graft.core.Caches.track(
+      expected.withColumn("expected_side", lit(true))
+        .join(translations(responses), Seq("custom_id", "description_id"), "full_outer")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // the sentinel is added after the cache, which then holds each
+    // translation once
+    val rec = withSentinel(both.filter(col("expected_side").isNotNull))
+    val ext = both.filter(col("expected_side").isNull)
+      .select("custom_id", "description_id", "translation")
     (rec.select("pos", "description_id", "english_sentence", "translated_sentence"),
       missing(rec), ext, summary(rec, ext))
   }

@@ -115,8 +115,11 @@ object CsvIO {
           var n = in.read(buf)
           while (n >= 0) { if (n > 0) out.write(buf, 0, n); n = in.read(buf) }
         } finally { in.close(); out.close() }
-        fs.delete(p, false)
-        fs.rename(tmp, p)
+        // a false return would leave the part missing from the final CSV
+        if (!fs.delete(p, false))
+          throw new java.io.IOException(s"BOM rewrite: could not delete $p")
+        if (!fs.rename(tmp, p))
+          throw new java.io.IOException(s"BOM rewrite: could not rename $tmp to $p")
       }
     }
   }

@@ -1,8 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Schemas
-import graft.translate.MockTranslator
+import graft.functions.TextFunctions
+import graft.operators.{Batching, Reconcile}
+import graft.translate.{MockTranslator, Translator}
 
 /** End-to-end pipeline slice (SURVEY.md §7): CSV-shaped input → batch →
   * mock translator → parse → reconcile → output, with and without injected
@@ -139,5 +145,105 @@ class PipelineSpec extends SparkSpec {
     val part = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-")).head
     val bytes = java.nio.file.Files.readAllBytes(part.toPath).take(3)
     assert(bytes.sameElements(Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)))
+  }
+
+  /** The faulty mock plus a second response for batch-0001 that
+    * re-translates P0, so last-wins resolution across responses decides
+    * P0's row. The duplicate is unioned after the mock's rows, so it is
+    * the later response whatever order a shuffle leaves the mock's rows in.
+    */
+  private class DuplicatingTranslator extends Translator {
+    var responses: DataFrame = _
+    def translate(requests: DataFrame): DataFrame = {
+      val mock = new MockTranslator(injectFaults = true).translate(requests)
+      responses = mock.unionByName(mock.filter(col("custom_id") === "batch-0001")
+        .withColumn("content", lit("""{"P0": "OVERRIDDEN"}""")))
+      responses
+    }
+  }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  for (np <- Seq(1, 2))
+    test(s"one persisted reconcile gives the standalone answers (numPartitions $np)") {
+      val in = input(300)
+      val t = new DuplicatingTranslator
+      val r = Pipeline.run(in, t, budget = 300, numPartitions = np)
+      // the standalone compositions over the same batches and responses
+      val baseCost = math.ceil(Pipeline.DefaultSystemPrompt.length / 4.0).toLong
+      val expected = Batching.assignBatches(
+          in.withColumn("tokens", TextFunctions.approxTokenCount(col("english_sentence")).cast("long")),
+          300, baseCost, numPartitions = np)
+        .select("custom_id", "pos", "description_id", "english_sentence")
+      val tr = Reconcile.translations(t.responses)
+      val rec = Reconcile.reconcile(expected, tr)
+      val ext = Reconcile.extra(expected, tr)
+      assert(sorted(r.output) ==
+        sorted(rec.select("pos", "description_id", "english_sentence", "translated_sentence")))
+      assert(sorted(r.missing) == sorted(Reconcile.missing(rec)))
+      assert(sorted(r.extra) == sorted(ext))
+      assert(r.summary.columns.toSeq ==
+        Seq("total", "successful", "failed", "shift_suspected", "success_rate", "extra"))
+      assert(sorted(r.summary) == sorted(Reconcile.summary(rec, ext)))
+      // the cases are exercised, not vacuous
+      assert(r.output.filter(col("description_id") === "P0").head()
+        .getAs[String]("translated_sentence") == "OVERRIDDEN")
+      assert(!r.missing.isEmpty && !r.extra.isEmpty)
+      // the missing report is exactly the output's sentinel rows
+      assert(sorted(r.missing.select("pos", "description_id", "english_sentence")) ==
+        sorted(r.output.filter(col("translated_sentence") === Schemas.FailedSentinel)
+          .select("pos", "description_id", "english_sentence")))
+    }
+
+  /** Each job's SQL root execution id (or "-"), per job group, in start
+    * order. Listener events arrive asynchronously; [[fence]] runs a job in
+    * its own group and waits for it, so every earlier job has been seen.
+    */
+  private class JobLog extends SparkListener {
+    private val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      jobs.add((prop("spark.jobGroup.id").getOrElse(""),
+        prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id")).getOrElse("-")))
+    }
+    def in[T](group: String)(body: => T): T = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    def fence(): Unit = {
+      val g = s"fence-${java.util.UUID.randomUUID()}"
+      in(g)(spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(_._1 == g)) {
+        assert(System.nanoTime() < deadline, "listener never saw the fence job")
+        Thread.sleep(10)
+      }
+    }
+    def of(group: String): Seq[String] = jobs.asScala.filter(_._1 == group).map(_._2).toSeq
+  }
+
+  test("the reports read the persisted reconcile: one job each for missing and extra") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val csv = s"$dir/in.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
+      (0 until 120).map(i => s"P$i,engine fault code number $i detected")
+        .mkString("description_id,english_sentence\n", "\n", "\n"))
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val r = log.in("output")(Pipeline.runCsv(spark, csv, s"$dir/out",
+        new MockTranslator(injectFaults = true)))
+      log.in("reports")(Pipeline.writeReports(r, s"$dir/reports"))
+      log.fence()
+      // writeReports runs one SQL execution per report: missing, extra, summary
+      val reports = log.of("reports")
+      val perReport = reports.distinct.map(id => reports.count(_ == id))
+      assert(perReport.length == 3 && !reports.contains("-"), reports)
+      assert(perReport.take(2) == Seq(1, 1), s"jobs per report (missing, extra, summary): $perReport")
+      // 29 jobs when each report re-ran the whole chain, 17 with one reconcile
+      val total = log.of("output").length + log.of("reports").length
+      assert(total <= 17, s"runCsv + writeReports ran $total jobs")
+    } finally spark.sparkContext.removeSparkListener(log)
   }
 }
